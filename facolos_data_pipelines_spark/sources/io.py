@@ -14,6 +14,10 @@ incremental reads prune partitions instead of scanning 100 TB.
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -380,70 +384,91 @@ def write_xlsx(df: DataFrame, path: str, sheet: str = "Sheet1",
     return len(head)
 
 
-def compact_parquet(
-    spark: SparkSession,
+def _parquet_files(path: str) -> list[str]:
+    return [
+        f
+        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        if os.path.isfile(f)
+    ]
+
+
+def _rewrite_in_place(
     path: str,
-    target_file_mb: int = 128,
-    partition_by: list[str] | None = None,
+    who: str,
+    target_file_mb: int,
+    rewrite: Callable[[str, int, list[str]], dict[str, int]],
+) -> dict[str, int]:
+    """The one in-place rewrite of a local parquet table.
+    ``rewrite(tmp, n_out, part_cols)`` writes the new table into
+    ``<path>._compact_tmp`` and returns its stats: ``n_out`` files of
+    ``target_file_mb`` fit the table's bytes, and ``part_cols`` are the
+    ``k=v`` directory columns of its files, in layout order. Two renames
+    then swap it in through ``<path>._compact_old``.
+
+    A crash at any step leaves a state a plain rerun heals: on entry, a
+    table found only in ``._compact_old`` is renamed back BEFORE the
+    leftovers are removed. Single writer, no concurrent readers during
+    the swap (the write_replace contract); local paths only — remote
+    tables use their format's compaction (Delta OPTIMIZE)."""
+    if "://" in path:
+        raise ValueError(
+            f"{who} handles local paths only, got {path!r}; use the table "
+            "format's compaction (e.g. Delta OPTIMIZE) on remote filesystems"
+        )
+    path = path.rstrip("/")
+    tmp, old = path + "._compact_tmp", path + "._compact_old"
+    if not os.path.exists(path) and os.path.isdir(old):
+        os.rename(old, path)
+    for stale in (tmp, old):
+        shutil.rmtree(stale, ignore_errors=True)
+    files = _parquet_files(path)
+    if not files:
+        raise ValueError(f"{who}: no parquet files under {path!r}")
+    total_bytes = sum(os.path.getsize(f) for f in files)
+    n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))  # ceil
+    part_cols = [
+        d.split("=", 1)[0]
+        for d in os.path.relpath(os.path.dirname(files[0]), path).split(os.sep)
+        if "=" in d
+    ]
+    stats = rewrite(tmp, n_out, part_cols)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old)
+    after = _parquet_files(path)
+    return {"files_before": len(files), "files_after": len(after), **stats}
+
+
+def compact_parquet(
+    spark: SparkSession, path: str, target_file_mb: int = 128
 ) -> dict[str, int]:
     """Compact a small-files parquet table in place: rewrite with file
     counts sized from the table's actual bytes (``target_file_mb`` per
-    output file, the usual 128 MB HDFS/S3 sweet spot).
+    output file, the usual 128 MB HDFS/S3 sweet spot), keeping the
+    table's partition layout — the partition columns are read from the
+    ``k=v`` directories of its files, so later partitioned appends stay
+    visible to Spark's partition discovery.
 
     Incremental micro-batch appends (the reference's 10-minute cycles)
     produce one-file-per-cycle tables whose scan cost at 100 TB is
     dominated by file-open overhead and tiny row groups; periodic
     compaction is the standard fix (cf. Delta OPTIMIZE). The rewrite
-    stages through a temp directory, then swaps via two directory
-    renames. The swap window is NOT transactional (a crash between the
-    renames leaves the data in ``<path>._compact_old``; no concurrent
-    readers/writers during compaction) — the same single-writer
-    contract as write_replace. LOCAL filesystem paths only, matching
-    this engine's file-based staging; on an object store / HDFS use the
-    table format's own compaction (Delta OPTIMIZE). Returns
+    stages through a temp directory and swaps it in with two renames;
+    if a crash interrupts the swap, rerunning ``compact_parquet``
+    restores the table and finishes the compaction. LOCAL filesystem
+    paths only, single writer (see ``_rewrite_in_place``). Returns
     ``{"files_before": n, "files_after": m, "rows": r}``; the input is
     scanned exactly once (the row count is read from the compacted
     output's footers, not a pre-pass).
     """
-    import glob
-    import os
-    import shutil
 
-    if "://" in path:
-        raise ValueError(
-            f"compact_parquet handles local paths only, got {path!r}; "
-            "use the table format's compaction (e.g. Delta OPTIMIZE) on "
-            "remote filesystems"
-        )
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    for stale in (tmp, old):  # leftovers from an interrupted prior run
-        shutil.rmtree(stale, ignore_errors=True)
+    def rewrite(tmp: str, n_out: int, part_cols: list[str]) -> dict[str, int]:
+        writer = spark.read.parquet(path).repartition(n_out).write.mode("overwrite")
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(tmp)
+        # count from the compacted output's metadata — a few large files,
+        # no second scan of the fragmented input
+        return {"rows": spark.read.parquet(tmp).count()}
 
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    if not files:
-        raise ValueError(f"compact_parquet: no parquet files under {path!r}")
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))  # ceil
-    writer = (
-        spark.read.parquet(path).repartition(int(n_out)).write.mode("overwrite")
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    # count from the compacted output's metadata — a few large files,
-    # no second scan of the fragmented input
-    rows = spark.read.parquet(tmp).count()
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    return {"files_before": len(files), "files_after": len(after), "rows": rows}
+    return _rewrite_in_place(path, "compact_parquet", target_file_mb, rewrite)

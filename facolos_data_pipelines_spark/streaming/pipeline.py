@@ -379,7 +379,8 @@ def _effective_store_partitions(
     bucket_store_path: str,
     requested: int,
     hash_col: str = "band_hash",
-    adopt_extra: dict | None = None,
+    family: dict | None = None,
+    adopt_family_if_meta_absent: bool = False,
 ) -> int:
     """Layout of an EXISTING bucket store is sticky: the partition count it
     was created with wins, and a mismatched request raises instead of
@@ -387,11 +388,19 @@ def _effective_store_partitions(
     pmod(``hash_col``, N_new) != stored bucket_pmod, so every probe
     misses and cross-batch duplicates leak through). ``hash_col`` is
     the store's bucket-hash column (band_hash for the minhash store,
-    sig for the embedding band store); ``adopt_extra`` travels into the
-    meta when a remote legacy store adopts the configured layout. Legacy stores written
-    before the meta file: unpartitioned layout -> keep writing
-    unpartitioned (mixing layouts makes Spark's partition-discovery read
-    silently drop the root-level legacy rows); local partitioned layout
+    sig for the embedding band store). The store meta is read ONCE here
+    per micro-batch.
+
+    ``family`` (the embedding store's ``{"num_planes", "num_bands"}``)
+    is pinned in the meta too and checked BEFORE the layout: a
+    mismatched family, or a meta without one, raises — the true family
+    is unrecoverable from (band, sig) data. A meta that is provably
+    ABSENT raises as well unless ``adopt_family_if_meta_absent``.
+
+    Legacy stores written before the meta file: unpartitioned layout ->
+    keep writing unpartitioned (mixing layouts makes Spark's
+    partition-discovery read silently drop the root-level legacy rows),
+    and adopt that layout by writing the meta; local partitioned layout
     without meta -> unrecoverable N, raise with a migration instruction.
     REMOTE ('://') partitioned stores whose meta is provably ABSENT
     (pre-meta legacy stores, or object stores where the best-effort write
@@ -409,9 +418,58 @@ def _effective_store_partitions(
     if meta is _META_UNREADABLE:
         _raise_unreadable_meta(
             bucket_store_path,
-            "refusing to adopt the configured store_partitions over a "
+            "refusing to probe — the recorded plane family and "
+            "layout must be readable before any signature can "
+            "be trusted"
+            if family
+            else "refusing to adopt the configured store_partitions over a "
             "possibly-valid recorded layout",
         )
+    if family and meta is None and not adopt_family_if_meta_absent:
+        # meta provably ABSENT (remote best-effort write failed, or a
+        # local legacy unpartitioned store): the true plane family is
+        # unrecoverable from (band, sig) data — the same refusal as a
+        # family-less meta below, but with an explicit operator
+        # override since no meta file exists to hand-edit in place
+        raise ValueError(
+            f"embedding band store at {bucket_store_path!r} exists "
+            "but has no meta file, so its plane family cannot be "
+            "verified; adopting the configured family "
+            f"(num_planes={family['num_planes']}, "
+            f"num_bands={family['num_bands']}) "
+            "would silently miss every historical bucket if it "
+            "differs, and pin the wrong family forever — write "
+            "the meta file with the family the store was CREATED "
+            'with ({"num_planes": P, "num_bands": B}), or pass '
+            "adopt_family_if_meta_absent=True if the configured "
+            "family is known to be the creation family"
+        )
+    if family and meta is not None:
+        if "num_planes" not in meta:
+            # a meta without the family (e.g. hand-written from the
+            # layout-repair instructions) must not silently disable the
+            # family check forever: refuse rather than adopt a
+            # possibly-wrong configured one
+            raise ValueError(
+                f"embedding band store at {bucket_store_path!r} has a "
+                "layout meta without the pinned plane family; add the "
+                'family the store was CREATED with ("num_planes": P, '
+                '"num_bands": B) to the meta file before probing — '
+                "adopting the configured family would silently miss "
+                "every historical bucket if it differs"
+            )
+        stored = (int(meta["num_planes"]), int(meta.get("num_bands", -1)))
+        num_planes, num_bands = family["num_planes"], family["num_bands"]
+        if stored != (num_planes, num_bands):
+            raise ValueError(
+                f"embedding band store at {bucket_store_path!r} was "
+                f"created with num_planes={stored[0]}, "
+                f"num_bands={stored[1]} but the sink was configured "
+                f"with num_planes={num_planes}, num_bands={num_bands}; "
+                "signatures under different plane families never "
+                "match — pass the stored family, or re-index the "
+                "accepted corpus into a new store"
+            )
     if meta is not None:
         n = int(meta["store_partitions"])
         if n == 0:
@@ -474,7 +532,7 @@ def _effective_store_partitions(
                     'original value ({"store_partitions": N}) before '
                     "probing it"
                 )
-            _write_store_meta(bucket_store_path, requested, spark, adopt_extra)
+            _write_store_meta(bucket_store_path, requested, spark, family)
             return requested
         raise ValueError(
             f"bucket store at {bucket_store_path!r} is bucket_pmod-"
@@ -483,7 +541,73 @@ def _effective_store_partitions(
             'with the original value ({"store_partitions": N}) before '
             "probing it"
         )
-    return 0  # legacy unpartitioned store: stay unpartitioned
+    # legacy unpartitioned store: stay unpartitioned, and pin that
+    _write_store_meta(bucket_store_path, 0, spark, family)
+    return 0
+
+
+def _probe_and_append(
+    spark,
+    bands: DataFrame,
+    survivors: DataFrame,
+    id_col: str,
+    key_cols: tuple[str, str],
+    n_parts: int,
+    store_exists: bool,
+    docs_sink_path: str,
+    store_path: str,
+    family: dict | None = None,
+) -> None:
+    """The tail both near-dup sinks share, after their within-batch
+    sweep: drop the ``survivors`` whose band rows hit the store, append
+    the rest to ``docs_sink_path``, then append their band rows to the
+    store (one ``key_cols`` bucket per row, partitioned by
+    ``bucket_pmod = pmod(key_cols[1], n_parts)`` when ``n_parts``), and
+    write the meta when this batch created the store.
+
+    ``bands`` are the WHOLE batch's band rows (id_col + ``key_cols``),
+    signed once. Probing them (not just the within-batch survivors')
+    returns a superset of hit ids whose extras are exactly the
+    within-batch losers — already dropped — so the survivor set is
+    unchanged while the probe reuses the one signing; the store append
+    is a survivor semi-join of the same rows (a doc's band rows don't
+    depend on which frame selects them)."""
+    if n_parts:
+        bands = bands.withColumn(
+            "bucket_pmod", F.pmod(F.col(key_cols[1]), F.lit(n_parts))
+        )
+    if store_exists:
+        store = spark.read.parquet(store_path)
+        probe_keys = [
+            *(["bucket_pmod"] if n_parts and "bucket_pmod" in store.columns else []),
+            *key_cols,
+        ]
+        # Broadcast the (small) batch side; the store is scanned
+        # map-side only — no store shuffle, and the partition-column
+        # equi-join key lets dynamic partition pruning skip store
+        # partitions the batch doesn't touch.
+        hit_ids = (
+            store.join(
+                F.broadcast(
+                    bands.select(*probe_keys, F.col(id_col).alias("_probe_id"))
+                ),
+                probe_keys,
+            )
+            .select(F.col("_probe_id").alias(id_col))
+            .dropDuplicates()
+        )
+        survivors = survivors.join(hit_ids, id_col, "left_anti")
+    survivors = survivors.localCheckpoint(eager=True)
+    survivors.write.mode("append").parquet(docs_sink_path)
+    out = bands.join(survivors.select(id_col), id_col, "left_semi").select(
+        *(["bucket_pmod"] if n_parts else []), *key_cols, id_col
+    )
+    writer = out.write.mode("append")
+    if n_parts:
+        writer = writer.partitionBy("bucket_pmod")
+    writer.parquet(store_path)
+    if not store_exists:
+        _write_store_meta(store_path, n_parts, spark, family)
 
 
 def near_dup_filter_sink(
@@ -560,18 +684,11 @@ def near_dup_filter_sink(
             if store_exists
             else store_partitions
         )
-        # ONE signing chain per micro-batch (r13): the previous shape
-        # ran the explode/minhash pipeline up to FOUR times per batch
-        # (inside minhash_dedup, for the probe buckets, again for the
-        # post-probe buckets, and once more when the bucket append
-        # executed) plus two extra eager executions. The batch's band
-        # rows are now computed once and checkpointed; the
-        # within-batch sweep (identical minhash_dedup semantics:
-        # lsh_candidate_pairs -> exact-Jaccard verify -> drop id_b),
-        # the store probe, and the store append are all projections /
-        # semi-joins of those rows — a doc's band rows don't depend on
-        # which frame selects them (the minhash_state_append
-        # contract).
+        # ONE signing chain per micro-batch (r13): the batch's band rows
+        # are computed once and checkpointed; the within-batch sweep
+        # (identical minhash_dedup semantics: lsh_candidate_pairs ->
+        # exact-Jaccard verify -> drop id_b), the store probe and the
+        # store append are all projections / semi-joins of those rows.
         bb = minhash_lsh_buckets(
             batch_df, text_col, id_col, num_hashes, bands, shingle_n, family
         ).localCheckpoint(eager=True)
@@ -580,59 +697,17 @@ def near_dup_filter_sink(
             batch_df, ipairs, text_col, id_col, shingle_n, threshold
         )
         internal_losers = idups.select(F.col("id_b").alias(id_col)).dropDuplicates()
-        survivors = batch_df.join(internal_losers, id_col, "left_anti")
-
-        def with_pmod(b: DataFrame) -> DataFrame:
-            if n_parts:
-                return b.withColumn(
-                    "bucket_pmod", F.pmod(F.col("band_hash"), F.lit(n_parts))
-                )
-            return b
-
-        if store_exists:
-            store = spark.read.parquet(bucket_store_path)
-            probe_keys = (
-                ["bucket_pmod", "band_id", "band_hash"]
-                if n_parts and "bucket_pmod" in store.columns
-                else ["band_id", "band_hash"]
-            )
-            # Broadcast the (small) batch side; the store is scanned
-            # map-side only — no store shuffle, and the partition-column
-            # equi-join key lets dynamic partition pruning skip store
-            # partitions the batch doesn't touch. Probing the WHOLE
-            # batch's buckets (not just within-batch survivors) returns
-            # a superset of hit ids whose extras are exactly the
-            # within-batch losers — already dropped — so the survivor
-            # set is unchanged while the probe reuses the one signing.
-            hit_ids = (
-                store.join(
-                    F.broadcast(
-                        with_pmod(bb).select(
-                            *probe_keys, F.col(id_col).alias("_probe_id")
-                        )
-                    ),
-                    probe_keys,
-                )
-                .select(F.col("_probe_id").alias(id_col))
-                .dropDuplicates()
-            )
-            survivors = survivors.join(hit_ids, id_col, "left_anti")
-        survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("append").parquet(docs_sink_path)
-        out = with_pmod(
-            bb.join(survivors.select(id_col), id_col, "left_semi")
-        ).select(
-            *(["bucket_pmod"] if n_parts else []),
-            "band_id",
-            "band_hash",
+        _probe_and_append(
+            spark,
+            bb,
+            batch_df.join(internal_losers, id_col, "left_anti"),
             id_col,
+            ("band_id", "band_hash"),
+            n_parts,
+            store_exists,
+            docs_sink_path,
+            bucket_store_path,
         )
-        writer = out.write.mode("append")
-        if n_parts:
-            writer = writer.partitionBy("bucket_pmod")
-        writer.parquet(bucket_store_path)
-        if _read_store_meta(bucket_store_path, spark) is None:
-            _write_store_meta(bucket_store_path, n_parts, spark)
 
     return filter_batch
 
@@ -777,8 +852,10 @@ def embedding_near_dup_sink(
     indexed vector): a failure between the two leaves the docs landed
     but UN-indexed, and the redelivery re-appends every survivor —
     at-least-once on the docs side for that one batch, same trade-off
-    as ``near_dup_filter_sink``. Recovery: ``compact_bucket_store``
-    plus a doc-id dedup pass over the docs sink. ZERO-NORM
+    as ``near_dup_filter_sink``. Recovery: a doc-id dedup pass over the
+    docs sink; the store needs none, since the redelivery indexes the
+    batch exactly once. A ``compact_bucket_store`` interrupted mid-swap
+    is healed by rerunning it. ZERO-NORM
     vectors are DROPPED (logged per batch): they have no defined
     cosine and no bucket identity, so they carry no replay protection
     — a policy difference from the batch operators (which pass them
@@ -839,6 +916,8 @@ def embedding_near_dup_sink(
             "life; size it for the TARGET corpus"
         )
 
+    family = {"num_planes": int(num_planes), "num_bands": int(num_bands)}
+
     def filter_batch(batch_df: DataFrame, batch_id: int) -> None:
         import logging
 
@@ -846,67 +925,14 @@ def embedding_near_dup_sink(
         if not batch_df.head(1):
             return
         store_exists = table_exists(spark, band_store_path)
-        family = {"num_planes": int(num_planes), "num_bands": int(num_bands)}
-        if store_exists:
-            meta = _read_store_meta(band_store_path, spark)
-            if meta is _META_UNREADABLE:
-                _raise_unreadable_meta(
-                    band_store_path,
-                    "refusing to probe — the recorded plane family and "
-                    "layout must be readable before any signature can "
-                    "be trusted",
-                )
-            if meta is not None and "num_planes" in meta:
-                stored = (int(meta["num_planes"]), int(meta.get("num_bands", -1)))
-                if stored != (num_planes, num_bands):
-                    raise ValueError(
-                        f"embedding band store at {band_store_path!r} was "
-                        f"created with num_planes={stored[0]}, "
-                        f"num_bands={stored[1]} but the sink was configured "
-                        f"with num_planes={num_planes}, num_bands={num_bands}; "
-                        "signatures under different plane families never "
-                        "match — pass the stored family, or re-index the "
-                        "accepted corpus into a new store"
-                    )
-            elif meta is not None:
-                # a meta without the family (e.g. hand-written from the
-                # layout-repair instructions) must not silently disable
-                # the family check forever: the true family is
-                # unrecoverable from (band, sig) data, so refuse rather
-                # than adopt a possibly-wrong configured one
-                raise ValueError(
-                    f"embedding band store at {band_store_path!r} has a "
-                    "layout meta without the pinned plane family; add the "
-                    'family the store was CREATED with ("num_planes": P, '
-                    '"num_bands": B) to the meta file before probing — '
-                    "adopting the configured family would silently miss "
-                    "every historical bucket if it differs"
-                )
-            elif meta is None and not adopt_family_if_meta_absent:
-                # meta provably ABSENT (remote best-effort write failed,
-                # or a local legacy unpartitioned store): the true plane
-                # family is unrecoverable from (band, sig) data — the
-                # same refusal as the family-less-meta branch above, but
-                # with an explicit operator override since no meta file
-                # exists to hand-edit in place
-                raise ValueError(
-                    f"embedding band store at {band_store_path!r} exists "
-                    "but has no meta file, so its plane family cannot be "
-                    "verified; adopting the configured family "
-                    f"(num_planes={num_planes}, num_bands={num_bands}) "
-                    "would silently miss every historical bucket if it "
-                    "differs, and pin the wrong family forever — write "
-                    "the meta file with the family the store was CREATED "
-                    'with ({"num_planes": P, "num_bands": B}), or pass '
-                    "adopt_family_if_meta_absent=True if the configured "
-                    "family is known to be the creation family"
-                )
-            n_parts = _effective_store_partitions(
-                spark, band_store_path, store_partitions,
-                hash_col="sig", adopt_extra=family,
+        n_parts = (
+            _effective_store_partitions(
+                spark, band_store_path, store_partitions, "sig", family,
+                adopt_family_if_meta_absent,
             )
-        else:
-            n_parts = store_partitions
+            if store_exists
+            else store_partitions
+        )
 
         # degenerate vectors — NULL, zero-norm, or carrying a NaN/NULL
         # element — have no defined cosine and no stable bucket
@@ -945,30 +971,12 @@ def embedding_near_dup_sink(
             .drop("_nsq")
         )
 
-        def with_pmod(b: DataFrame) -> DataFrame:
-            if n_parts:
-                return b.withColumn(
-                    "bucket_pmod", F.pmod(F.col("sig"), F.lit(n_parts))
-                )
-            return b
-
-        # ONE signing chain per micro-batch (r13): the previous shape
-        # signed the batch inside embedding_dedup AND re-signed the
-        # within-batch survivors for the store append. The batch's
-        # band rows are now computed once and checkpointed; the
-        # within-batch sweep consumes them via bands_df, the store
-        # probe broadcasts them, and the append is a survivor
-        # semi-join of them (the embedding_state_append contract: a
-        # vector's band rows don't depend on which frame selects
-        # them). Probing the WHOLE batch's rows (not just
-        # within-batch survivors) returns a superset of hit ids whose
-        # extras are exactly the within-batch losers — already
-        # dropped — so the survivor set is unchanged.
-        sigs_all = with_pmod(
-            embedding_band_state(
-                batch, vec_col, id_col, num_planes, num_bands, dim,
-                signature_impl,
-            )
+        # ONE signing chain per micro-batch (r13): the batch's band rows
+        # are computed once and checkpointed; the within-batch sweep
+        # consumes them via bands_df, and the store probe and append
+        # reuse them (the embedding_state_append contract).
+        sigs_all = embedding_band_state(
+            batch, vec_col, id_col, num_planes, num_bands, dim, signature_impl
         ).localCheckpoint(eager=True)
         n_bad = int(deg_obs.get["n_bad"])
         if n_bad:
@@ -984,42 +992,18 @@ def embedding_near_dup_sink(
             signature_impl=signature_impl,
             bands_df=sigs_all.select(F.col(id_col), "band", "sig"),
         )
-        if store_exists:
-            store = spark.read.parquet(band_store_path)
-            probe_keys = (
-                ["bucket_pmod", "band", "sig"]
-                if n_parts and "bucket_pmod" in store.columns
-                else ["band", "sig"]
-            )
-            # broadcast the (small) batch side; the store is scanned
-            # map-side only — no store shuffle, and the partition-column
-            # equi-join key enables dynamic partition pruning
-            hit_ids = (
-                store.join(
-                    F.broadcast(
-                        sigs_all.select(
-                            *probe_keys, F.col(id_col).alias("_probe_id")
-                        )
-                    ),
-                    probe_keys,
-                )
-                .select(F.col("_probe_id").alias(id_col))
-                .dropDuplicates()
-            )
-            survivors = survivors.join(hit_ids, id_col, "left_anti")
-        survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("append").parquet(docs_sink_path)
-        out = sigs_all.join(
-            survivors.select(id_col).dropDuplicates(), id_col, "left_semi"
-        ).select(
-            *(["bucket_pmod"] if n_parts else []), "band", "sig", id_col
+        _probe_and_append(
+            spark,
+            sigs_all,
+            survivors,
+            id_col,
+            ("band", "sig"),
+            n_parts,
+            store_exists,
+            docs_sink_path,
+            band_store_path,
+            family,
         )
-        writer = out.write.mode("append")
-        if n_parts:
-            writer = writer.partitionBy("bucket_pmod")
-        writer.parquet(band_store_path)
-        if _read_store_meta(band_store_path, spark) is None:
-            _write_store_meta(band_store_path, n_parts, spark, family)
 
     return filter_batch
 
@@ -1036,89 +1020,57 @@ def compact_bucket_store(
     for ``near_dup_filter_sink``'s minhash store, ("band", "sig") with
     ``id_col="vec_id"`` for ``embedding_near_dup_sink``'s store — min-id
     owner kept for lineage) and rewrite with bounded file counts,
-    preserving the ``bucket_pmod`` partition layout when present.
+    preserving the ``bucket_pmod`` partition layout when the store's
+    files carry it, and the WHOLE store meta with it.
 
-    Run this between micro-batch cycles (single-writer contract and
-    local-path rename swap, same as ``compact_parquet``) on whatever
-    cadence keeps the per-partition file count bounded — the probe join
-    is correct with duplicates and small files, just slower; compaction
-    restores the O(distinct buckets) scan in ONE pass (dedup + re-file
-    in the same job, no second rewrite). Returns ``{"files_before",
+    Run this between micro-batch cycles on whatever cadence keeps the
+    per-partition file count bounded — the probe join is correct with
+    duplicates and small files, just slower; compaction restores the
+    O(distinct buckets) scan in ONE pass (dedup + re-file in the same
+    job, no second rewrite). It swaps the store in place exactly like
+    ``compact_parquet`` (local paths, single writer): a crash mid-swap
+    leaves a state that rerunning ``compact_bucket_store`` restores and
+    compacts, meta included. A meta file that exists but can't be read
+    is refused before any work. Returns ``{"files_before",
     "files_after", "rows_before", "rows_after"}``.
     """
-    import glob
-    import os
-    import shutil
+    from ..sources.io import _rewrite_in_place
 
-    if "://" in bucket_store_path:
-        raise ValueError(
-            "compact_bucket_store handles local paths only; use the table "
-            "format's compaction on remote filesystems"
+    def rewrite(tmp: str, n_out: int, part_cols: list[str]) -> dict[str, int]:
+        # the meta must travel with the compacted store, so an
+        # unreadable one refuses before any compaction work (same
+        # contract as _effective_store_partitions)
+        meta = _read_store_meta(bucket_store_path, spark)
+        if meta is _META_UNREADABLE:
+            _raise_unreadable_meta(
+                bucket_store_path,
+                "refusing to compact — the meta must travel with the "
+                "compacted store",
+            )
+        store = spark.read.parquet(bucket_store_path)
+        rows_before = store.count()
+        deduped = store.groupBy(*part_cols, *key_cols).agg(
+            F.min(id_col).alias(id_col)
         )
-    path = bucket_store_path.rstrip("/")
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    if not files:
-        raise ValueError(f"compact_bucket_store: no parquet files under {path!r}")
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))  # ceil
-
-    # read the layout meta BEFORE any compaction work: a meta file that
-    # exists but can't be parsed must refuse up front (same contract as
-    # _effective_store_partitions) — compacting without it would strand
-    # the store's pinned partition count
-    meta = _read_store_meta(path, spark)
-    if meta is _META_UNREADABLE:
-        _raise_unreadable_meta(
-            path,
-            "refusing to compact — the meta must travel with the "
-            "compacted store",
+        writer = (
+            # one output file per bucket_pmod partition (buckets are
+            # id-width; a partition of a 100 TB store is modest parquet)
+            deduped.repartition(*part_cols).write.partitionBy(*part_cols)
+            if part_cols
+            else deduped.repartition(n_out).write
         )
+        writer.mode("overwrite").parquet(tmp)
+        if meta is not None:
+            # the WHOLE meta travels — an embedding band store's record
+            # also pins the plane family; rewriting only the layout key
+            # would silently disable the family check
+            extra = {k: v for k, v in meta.items() if k != "store_partitions"}
+            _write_store_meta(tmp, meta["store_partitions"], spark, extra or None)
+        return {
+            "rows_before": rows_before,
+            "rows_after": spark.read.parquet(tmp).count(),
+        }
 
-    store = spark.read.parquet(path)
-    rows_before = store.count()
-    partitioned = "bucket_pmod" in store.columns
-    part_cols = ["bucket_pmod"] if partitioned else []
-    deduped = store.groupBy(*part_cols, *key_cols).agg(
-        F.min(id_col).alias(id_col)
+    return _rewrite_in_place(
+        bucket_store_path, "compact_bucket_store", target_file_mb, rewrite
     )
-    if partitioned:
-        # one output file per store partition (buckets are id-width;
-        # a partition of a 100 TB store is still modest parquet)
-        deduped = deduped.repartition("bucket_pmod")
-    else:
-        deduped = deduped.repartition(int(n_out))
-    tmp = path + "._compact_tmp"
-    old = path + "._compact_old"
-    for stale in (tmp, old):
-        shutil.rmtree(stale, ignore_errors=True)
-    writer = deduped.write.mode("overwrite")
-    if partitioned:
-        writer = writer.partitionBy("bucket_pmod")
-    writer.parquet(tmp)
-    rows_after = spark.read.parquet(tmp).count()
-    if meta is not None:
-        # the WHOLE meta travels with the compacted store — an
-        # embedding band store's record also pins the plane family
-        # (num_planes/num_bands); rewriting only the layout key would
-        # silently disable the family check and let a later mismatched
-        # family miss every historical bucket
-        extra = {k: v for k, v in meta.items() if k != "store_partitions"}
-        _write_store_meta(tmp, meta["store_partitions"], spark, extra or None)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    return {
-        "files_before": len(files),
-        "files_after": len(after),
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-    }

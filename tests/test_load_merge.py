@@ -230,6 +230,129 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     assert out.agg(F.sum("v")).first()[0] == 2 * sum(range(1000))
 
 
+def test_compact_parquet_keeps_partition_layout(spark, tmp_path):
+    """compact_parquet reads the partition columns from the table's k=v
+    directories: the compacted table keeps its d=* layout, so a later
+    partitioned append does not hide the compacted rows from Spark's
+    partition discovery."""
+    import os
+
+    from facolos_data_pipelines_spark.sources.io import compact_parquet
+
+    path = str(tmp_path / "parted")
+    df = spark.range(0, 100).withColumn("d", (F.col("id") % 5).cast("int"))
+    for i in range(4):
+        df.filter(F.col("id") % 4 == i).write.mode("append").partitionBy("d").parquet(path)
+    assert compact_parquet(spark, path)["rows"] == 100
+    parts = sorted(p for p in os.listdir(path) if p.startswith("d="))
+    assert parts == [f"d={i}" for i in range(5)]
+    more = spark.range(100, 105).withColumn("d", (F.col("id") % 5).cast("int"))
+    more.write.mode("append").partitionBy("d").parquet(path)
+    out = spark.read.parquet(path)
+    assert sorted(r["id"] for r in out.select("id").collect()) == list(range(105))
+    assert out.filter(F.col("d") != F.col("id") % 5).count() == 0
+
+
+def _crash_swap_once(monkeypatch, point):
+    """Make the compaction's rename swap raise once at ``point``: after
+    the temp write (first rename), between the two renames (second
+    rename), or before ``._compact_old`` is removed."""
+    import os
+    import shutil
+
+    real_rename, real_rmtree = os.rename, shutil.rmtree
+    state = {"renames": 0, "armed": True}
+
+    def fire():
+        state["armed"] = False
+        raise OSError(f"injected crash: {point}")
+
+    def rename(src, dst):
+        state["renames"] += 1
+        nth = {"after_tmp_write": 1, "between_renames": 2}.get(point)
+        if state["armed"] and state["renames"] == nth:
+            fire()
+        return real_rename(src, dst)
+
+    def rmtree(p, *args, **kwargs):
+        if (
+            state["armed"]
+            and point == "before_old_removed"
+            and str(p).endswith("._compact_old")
+            and os.path.isdir(p)
+        ):
+            fire()
+        return real_rmtree(p, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+
+
+@pytest.mark.parametrize(
+    "point", ["after_tmp_write", "between_renames", "before_old_removed"]
+)
+@pytest.mark.parametrize("table", ["parquet", "bucket_store"])
+def test_compaction_rerun_heals_crash_mid_swap(spark, tmp_path, monkeypatch, table, point):
+    """A compaction that dies at any step of its swap leaves a state that
+    a plain rerun turns into the no-fault result: the same rows (and,
+    for a bucket store, the same meta), with no temp or old copy left."""
+    import os
+
+    from facolos_data_pipelines_spark.sources.io import compact_parquet
+    from facolos_data_pipelines_spark.streaming.pipeline import (
+        _read_store_meta,
+        _write_store_meta,
+        compact_bucket_store,
+    )
+
+    path = str(tmp_path / table)
+    meta = {"store_partitions": 4, "num_planes": 4, "num_bands": 2}
+    if table == "parquet":
+        df = spark.range(0, 200).withColumn("v", F.col("id") * 3)
+        for i in range(4):
+            df.filter(F.col("id") % 4 == i).coalesce(1).write.mode("append").parquet(path)
+        expected = sorted(tuple(r) for r in df.collect())
+
+        def compact():
+            return compact_parquet(spark, path)
+
+        def rows():
+            out = spark.read.parquet(path).select("id", "v")
+            return sorted(tuple(r) for r in out.collect())
+
+    else:
+        # buckets 0..19 in 3 appends; every bucket repeats with a higher id
+        cols = "bucket_pmod int, band_id int, band_hash long, doc_id long"
+        for j in range(3):
+            spark.createDataFrame(
+                [(h % 4, h % 2, h, 10 * j + h) for h in range(20)], cols
+            ).write.mode("append").partitionBy("bucket_pmod").parquet(path)
+        _write_store_meta(path, 4, extra={"num_planes": 4, "num_bands": 2})
+        expected = sorted((h % 4, h % 2, h, h) for h in range(20))
+
+        def compact():
+            return compact_bucket_store(spark, path)
+
+        def rows():
+            return sorted(
+                tuple(r)
+                for r in spark.read.parquet(path)
+                .select("bucket_pmod", "band_id", "band_hash", "doc_id")
+                .collect()
+            )
+
+    _crash_swap_once(monkeypatch, point)
+    with pytest.raises(OSError, match="injected crash"):
+        compact()
+    compact()
+    assert rows() == expected
+    if table == "bucket_store":
+        assert _read_store_meta(path) == meta
+        assert not [p for p in os.listdir(path) if p.endswith(".parquet")]
+    for leftover in ("._compact_tmp", "._compact_old"):
+        assert not os.path.exists(path + leftover)
+
+
 def test_upsert_parquet_delta_merge_dispatch(spark, tmp_path):
     """S11's Delta MERGE INTO slot: when delta-spark is importable,
     upsert_parquet against a Delta table must dispatch to a real
