@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog.schemas import DATA_SOURCES_SCHEMA
-from ..sources.io import table_exists
+from ..sources.io import local_frame, table_exists
 
 
 def seed_data_sources(
@@ -38,7 +38,7 @@ def seed_data_sources(
     if table_exists(spark, path) and not overwrite:
         return
     rows = [(name, platform, float(freq), None, True) for name, platform, freq in sources]
-    spark.createDataFrame(rows, DATA_SOURCES_SCHEMA).write.mode("overwrite").parquet(path)
+    local_frame(spark, rows, DATA_SOURCES_SCHEMA).write.mode("overwrite").parquet(path)
 
 
 def load_registry(spark: SparkSession, path: str) -> DataFrame:

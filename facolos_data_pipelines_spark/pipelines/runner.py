@@ -9,10 +9,12 @@ control-table row per run (create_facolos_enterprise_schemas.sql:79-91).
 Where the reference materialized at every stage boundary (XCom JSON,
 /tmp parquet — dags/tiktok_shop_orders_etl_dag.py:83-185), a cycle here
 is one lazy plan per endpoint: the only materializations are the final
-staging write and the tiny metric aggregates. Endpoints are independent
-and can run concurrently; priority ordering is preserved as input order
-(production_etl_orchestrator.py:136-145 — business value under a time
-budget, not a correctness constraint).
+staging write, the tiny metric aggregates, and ONE control-log append
+per cycle (every endpoint run's ``batch_runs`` row, Arrow-built, one
+file). Endpoints are independent and can run concurrently; priority
+ordering is preserved as input order (production_etl_orchestrator.py:
+136-145 — business value under a time budget, not a correctness
+constraint).
 """
 
 from __future__ import annotations
@@ -27,7 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog.schemas import BATCH_RUNS_SCHEMA
 from ..quality.checks import multi_table_summary, quality_gate
-from ..sources.io import append_with_pk_rejection, table_exists, upsert_parquet
+from ..sources.io import (
+    append_with_pk_rejection,
+    local_frame,
+    table_exists,
+    upsert_parquet,
+)
 
 
 @dataclass
@@ -53,34 +60,21 @@ class EndpointSpec:
         return self.staging_table or self.name
 
 
-def _log_run(
-    spark: SparkSession,
-    control_root: str,
-    batch_id: str,
-    source: str,
-    table: str,
-    status: str,
-    records: int,
-    started: dt.datetime,
-    error: str | None = None,
-) -> None:
-    """Append one batch_runs row (the reference's ETL-control log)."""
-    row = [
-        (
-            batch_id,
-            source,
-            table,
-            status,
-            records,
-            records,
-            started,
-            dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-            error,
-        )
-    ]
-    spark.createDataFrame(row, BATCH_RUNS_SCHEMA).write.mode("append").parquet(
+def _log_run(spark: SparkSession, control_root: str, rows: list[tuple]) -> None:
+    """Append the cycle's batch_runs rows (the reference's ETL-control
+    log), one per endpoint run, in ONE write: one job and one file per
+    cycle, built through Arrow (``sources.io.local_frame``) so no Python
+    worker starts. The runner calls it once, after the endpoint loop and
+    before the registry advance, so a cycle killed mid-loop leaves
+    neither log rows nor a registry advance; its rerun re-lands
+    idempotently (PK-rejected appends, keyed upserts)."""
+    local_frame(spark, rows, BATCH_RUNS_SCHEMA).write.mode("append").parquet(
         f"{control_root}/batch_runs"
     )
+
+
+def _utcnow() -> dt.datetime:
+    return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
 
 def run_incremental_cycle(
@@ -108,7 +102,7 @@ def run_incremental_cycle(
     from .registry import due_sources, mark_extracted
 
     batch_id = str(uuid.uuid4())
-    started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    started = _utcnow()
     report: dict = {"batch_id": batch_id, "endpoints": {}, "status": "success"}
 
     due: set[str] | None = None
@@ -125,6 +119,7 @@ def run_incremental_cycle(
         due = due_sources(spark, registry_path, now)
 
     extracted_ok: list[str] = []
+    runs: list[tuple] = []  # batch_runs rows, written once after the loop
     for ep in endpoints:
         if due is not None and ep.name in registered and ep.name not in due:
             report["endpoints"][ep.name] = {"status": "skipped_not_due"}
@@ -158,25 +153,18 @@ def run_incremental_cycle(
                 "seconds": round(time.time() - t0, 3),
             }
             extracted_ok.append(ep.name)
-            if control_root:
-                _log_run(
-                    spark, control_root, batch_id, ep.name, ep.table(), "success", n, started
-                )
+            runs.append(
+                (batch_id, ep.name, ep.table(), "success", n, n, started, _utcnow(), None)
+            )
         except Exception as exc:  # noqa: BLE001 — cycle continues per reference
             report["endpoints"][ep.name] = {"status": "failed", "error": str(exc)}
             report["status"] = "partial"
-            if control_root:
-                _log_run(
-                    spark,
-                    control_root,
-                    batch_id,
-                    ep.name,
-                    ep.table(),
-                    "failed",
-                    0,
-                    started,
-                    error=str(exc),
-                )
+            runs.append(
+                (batch_id, ep.name, ep.table(), "failed", 0, 0, started, _utcnow(), str(exc))
+            )
+
+    if control_root and runs:
+        _log_run(spark, control_root, runs)
 
     if registry_path is not None and extracted_ok:
         mark_extracted(

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.io import local_frame
+
 # One row per pipeline cycle — the reference's metrics dict
 # (production_monitor.py:43-62).
 CYCLE_METRICS_SCHEMA = T.StructType(
@@ -72,15 +74,20 @@ def alert_conditions(
 
     Cycle ordering is the (started_at, cycle_id) tuple — cycle_id
     breaks started_at ties deterministically, so concurrent cycles
-    sharing a timestamp never hide a trailing failure run.
-    CYCLE_METRICS_SCHEMA contract: started_at must be non-null (a null
-    started_at row has no position in the cycle order and is excluded
-    from the consecutive counters)."""
+    sharing a timestamp never hide a trailing failure run, and the
+    latest duration is ``max_by`` over the same key, folded into the
+    boundary aggregate. The result row is Arrow-built
+    (``sources.io.local_frame``), so collecting it starts no Python
+    worker. CYCLE_METRICS_SCHEMA contract: started_at must be non-null
+    (a null started_at row has no position in the cycle order and is
+    excluded from the consecutive counters)."""
     _key = F.struct(F.col("started_at"), F.col("cycle_id"))
     bounds = metrics.agg(
         F.max(F.when(F.col("success"), _key)).alias("_last_success"),
         F.max(F.when(F.col("records_processed") > 0, _key)).alias("_last_data"),
+        F.max_by("duration_seconds", _key).alias("_latest_duration"),
     ).collect()[0]
+    latest_duration = bounds["_latest_duration"] or 0.0
 
     def _after(boundary) -> "F.Column":
         # no success / no data yet -> every cycle counts
@@ -101,15 +108,6 @@ def alert_conditions(
     no_data_cycles = after["_nd"] or 0
 
     summary = cycle_summary(metrics, last_n).collect()[0]
-    latest = (
-        metrics.orderBy(F.col("started_at").desc())
-        .limit(1)
-        .select("duration_seconds")
-        .collect()
-    )
-    latest_duration = latest[0][0] if latest else 0.0
-
-    spark = metrics.sparkSession
     row = [
         (
             float(latest_duration),
@@ -134,7 +132,7 @@ def alert_conditions(
             T.StructField("success_rate_alert", T.BooleanType()),
         ]
     )
-    return spark.createDataFrame(row, schema)
+    return local_frame(metrics.sparkSession, row, schema)
 
 
 def schedule_accuracy(
@@ -270,8 +268,11 @@ def record_cycle(
     success: bool,
 ) -> None:
     """Append one cycle-metrics row (the runner calls this; a
-    StreamingQueryListener would do the same from query progress)."""
-    spark.createDataFrame(
+    StreamingQueryListener would do the same from query progress).
+    Arrow-built (``sources.io.local_frame``): one file per append and no
+    Python-worker job; naive ``started_at`` is read as UTC."""
+    local_frame(
+        spark,
         [(cycle_id, started_at, float(duration_seconds), int(records_processed), bool(success))],
         CYCLE_METRICS_SCHEMA,
     ).write.mode("append").parquet(path)

@@ -21,6 +21,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.incremental import retention_filter
 from ..operators.merge import append_dedup, merge_upsert
@@ -46,6 +47,27 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(hpath))
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A one-partition frame of a few driver-side ``rows`` (tuples in
+    ``schema`` field order), built through Arrow.
+
+    ``createDataFrame(<list>)`` parallelizes pickled rows through a
+    PythonRDD, so every action on it starts Python-worker tasks over
+    ``defaultParallelism`` partitions (~0.5 s for a one-row append on
+    local[4]; ~0.17 s this way). The Arrow table is shipped to the JVM
+    directly, keeps ``schema`` (types and nullability) exactly, and the
+    single partition writes one file per append. Naive datetimes are
+    read as UTC, the engine's convention (session time zone UTC)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def write_append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:

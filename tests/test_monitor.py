@@ -63,6 +63,26 @@ def test_alerts_count_failures_on_timestamp_ties(spark):
     assert a["no_data_cycles"] == 2
 
 
+def test_alerts_latest_duration_breaks_timestamp_ties_by_cycle_id(spark):
+    """Two cycles share started_at: the larger cycle_id is the latest,
+    so its duration sets latest_duration_seconds and duration_alert,
+    whatever the row order."""
+    ts = dt.datetime(2024, 1, 1, 12)
+    rows = [
+        ("c0", ts - dt.timedelta(minutes=10), 900.0, 100, True),
+        ("c1", ts, 10.0, 100, True),
+        ("c2", ts, 700.0, 100, True),
+    ]
+    for data in (rows, rows[::-1]):
+        a = alert_conditions(spark.createDataFrame(data, CYCLE_METRICS_SCHEMA)).collect()[0]
+        assert a["latest_duration_seconds"] == 700.0
+        assert a["duration_alert"]
+    swapped = [rows[0], ("c1", ts, 700.0, 100, True), ("c2", ts, 10.0, 100, True)]
+    a = alert_conditions(spark.createDataFrame(swapped, CYCLE_METRICS_SCHEMA)).collect()[0]
+    assert a["latest_duration_seconds"] == 10.0
+    assert not a["duration_alert"]
+
+
 def test_schedule_accuracy_within_and_out_of_tolerance(spark):
     # exact 10-minute cadence vs a 10-minute target: accurate
     m = _metrics(spark, [(60.0, 100, True)] * 6)

@@ -1,10 +1,19 @@
 """Pipeline runner (SURVEY §3.1-3.3): incremental cycle, replay
 idempotence, quality gate, batch_runs control log, upsert mode."""
 
+import datetime as dt
+import glob
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from facolos_data_pipelines_spark.catalog.schemas import RAW_TIKTOK_ORDER_SCHEMA
+from facolos_data_pipelines_spark.catalog.schemas import (
+    BATCH_RUNS_SCHEMA,
+    DATA_SOURCES_SCHEMA,
+    RAW_TIKTOK_ORDER_SCHEMA,
+)
 from facolos_data_pipelines_spark.operators.conform import flatten_tiktok_orders
 from facolos_data_pipelines_spark.pipelines import EndpointSpec, run_incremental_cycle
 
@@ -114,8 +123,6 @@ def test_cycle_upsert_partition_scoped_layout(spark, tmp_path):
     merge never looks outside the incoming batch's partitions):
     create_time qualifies — order_status, which changes per key across
     cycles, would leave stale rows behind and must not be used."""
-    import os
-
     root = str(tmp_path / "staging")
     spec = EndpointSpec(
         name="tiktok_orders",
@@ -201,6 +208,103 @@ def test_cycle_continues_past_failing_endpoint(spark, tmp_path):
     assert report["endpoints"]["bad"]["status"] == "failed"
     assert report["endpoints"]["tiktok_orders"]["status"] == "success"
     assert report["quality"]["passed"]
+
+
+def test_cycle_logs_every_endpoint_run_in_one_append(spark, tmp_path):
+    """The cycle's batch_runs rows (success and failed alike) land in ONE
+    append: one data file per cycle, all under the cycle's batch_id."""
+    root = str(tmp_path / "staging")
+    control = str(tmp_path / "control")
+    runs_dir = f"{control}/batch_runs"
+
+    def boom(s):
+        raise RuntimeError("api down")
+
+    bad = EndpointSpec(name="bad", extract=boom, transform=lambda df, b: df, primary_keys=["x"])
+
+    def cycle():
+        return run_incremental_cycle(
+            spark, [bad, _spec(spark)], root, control_root=control, min_tables_with_data=1
+        )
+
+    report = cycle()
+    assert report["status"] == "partial"
+    assert len(glob.glob(f"{runs_dir}/*.parquet")) == 1
+    rows = {r["source_name"]: r for r in spark.read.parquet(runs_dir).collect()}
+    assert set(rows) == {"bad", "tiktok_orders"}
+    assert {r["batch_id"] for r in rows.values()} == {report["batch_id"]}
+    ok, failed = rows["tiktok_orders"], rows["bad"]
+    assert ok["status"] == "success" and ok["error_message"] is None
+    assert ok["records_extracted"] == ok["records_loaded"] == 3
+    assert failed["status"] == "failed" and failed["error_message"] == "api down"
+    assert failed["records_extracted"] == failed["records_loaded"] == 0
+
+    cycle()
+    assert len(glob.glob(f"{runs_dir}/*.parquet")) == 2
+    # no endpoint ran -> no control-log append
+    run_incremental_cycle(spark, [], root, control_root=control)
+    assert len(glob.glob(f"{runs_dir}/*.parquet")) == 2
+
+
+_TS = dt.datetime(2024, 6, 1, 12, 0, 0, 123456)
+
+
+def _control_frame(spark, table, path):
+    """(frame, rows, schema) of one control-plane table, with ``path``
+    written through the program's own writer for that table."""
+    from facolos_data_pipelines_spark.pipelines.registry import seed_data_sources
+    from facolos_data_pipelines_spark.pipelines.runner import _log_run
+    from facolos_data_pipelines_spark.quality.monitor import (
+        CYCLE_METRICS_SCHEMA,
+        alert_conditions,
+        record_cycle,
+    )
+    from facolos_data_pipelines_spark.sources.io import local_frame
+
+    if table == "batch_runs":
+        schema = BATCH_RUNS_SCHEMA
+        rows = [
+            ("b1", "tiktok", "t", "success", 3, 3, _TS, _TS, None),
+            ("b1", "misa", "m", "failed", 0, 0, _TS, _TS, "api down"),
+        ]
+        _log_run(spark, path.rsplit("/", 1)[0], rows)
+    elif table == "cycle_metrics":
+        schema, rows = CYCLE_METRICS_SCHEMA, [("c1", _TS, 12.5, 42, True)]
+        record_cycle(spark, path, *rows[0])
+    elif table == "data_sources":
+        schema, rows = DATA_SOURCES_SCHEMA, [("tiktok", "ecommerce", 6.0, None, True)]
+        seed_data_sources(spark, path, [("tiktok", "ecommerce", 6.0)])
+    else:
+        metrics = spark.createDataFrame([("c1", _TS, 700.0, 0, False)], CYCLE_METRICS_SCHEMA)
+        df = alert_conditions(metrics)
+        df.write.parquet(path)
+        return df, [tuple(r) for r in df.collect()], df.schema
+    return local_frame(spark, rows, schema), rows, schema
+
+
+@pytest.mark.parametrize("table", ["batch_runs", "cycle_metrics", "data_sources", "alerts"])
+def test_control_frames_are_arrow_built(spark, tmp_path, table):
+    """Control-plane frames skip the PythonRDD of list-built frames, sit
+    in one partition, and keep the rows, schema and parquet footer that
+    ``createDataFrame(<list>, schema)`` gives."""
+    new_path, old_path = str(tmp_path / "new" / table), str(tmp_path / "old")
+    df, rows, schema = _control_frame(spark, table, new_path)
+    rdd = df._jdf.queryExecution().toRdd()
+    assert "PythonRDD" not in rdd.toDebugString()
+    assert rdd.getNumPartitions() == 1
+
+    old = spark.createDataFrame(rows, schema)
+    assert df.schema == old.schema
+    assert df.collect() == old.collect()
+
+    old.write.parquet(old_path)
+    (new_file,) = glob.glob(f"{new_path}/*.parquet")
+    new_footer = pq.read_schema(new_file)
+    old_footer = pq.read_schema(glob.glob(f"{old_path}/*.parquet")[0])
+    assert [(f.name, f.type, f.nullable) for f in new_footer] == [
+        (f.name, f.type, f.nullable) for f in old_footer
+    ]
+    assert spark.read.parquet(new_path).collect() == old.collect()
 
 
 def test_curate_corpus_end_to_end(spark, sf_dir, tmp_path):
